@@ -22,8 +22,8 @@ removed once the winner is kept.
 Usage:
   python scripts/bench_ab.py --all-tpcds --reps 3            # stable suite
   python scripts/bench_ab.py -q tpcds_q90_am_pm_ratio --reps 7
-  python scripts/bench_ab.py -q tpch_q5_local_supplier \\
-      --a TPCTOOLS_Q5_PREREDUCE=0 --b TPCTOOLS_Q5_PREREDUCE=1 --reps 5
+  python scripts/bench_ab.py -q dedup_minhash \\
+      --a TPCTOOLS_MINHASH_ARROW=0 --b TPCTOOLS_MINHASH_ARROW=1 --reps 5
 """
 
 from __future__ import annotations

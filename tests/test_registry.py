@@ -66,15 +66,17 @@ def test_readme_inventory_table_matches_registry():
     the right check kind — regenerated wholesale when queries are added,
     so drift (a missing row, a stale count) fails here, not in review."""
     import re
+    from collections import Counter
 
     from tpctools_spark.registry import oracle_queries, spark_queries
 
     qs = spark_queries()
     os_ = oracle_queries()
     text = open("/root/repo/README.md").read()
-    rows = dict(
-        re.findall(r"^\| `([a-z0-9_]+)` \| (oracle|rows-only) \|", text, re.M)
-    )
+    found = re.findall(r"^\| `([a-z0-9_]+)` \| (oracle|rows-only) \|", text, re.M)
+    dupes = sorted(k for k, n in Counter(k for k, _ in found).items() if n > 1)
+    assert not dupes, f"README table lists queries more than once: {dupes[:10]}"
+    rows = dict(found)
     missing = sorted(set(qs) - set(rows))
     assert not missing, f"README table missing: {missing[:10]}"
     for k in qs:

@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tpctools_spark.catalog import read
 from tpctools_spark.generate_tpcds import build_tpcds_table
 from tpctools_spark.queries._util import sql_trunc_digits, trunc_digits
 from tpctools_spark.registry import query
@@ -67,11 +68,11 @@ def _t(spark: SparkSession, name: str) -> DataFrame:
     # table directory (bench.py's sf1 suite), read it instead of the
     # default sf0.001 scratch materialization. Query logic is
     # scale-blind either way.
-    override = os.environ.get("TPCTOOLS_TPCDS_DIR")
-    if override:
-        return spark.read.parquet(os.path.join(override, name))
-    _materialize(spark)
-    return spark.read.parquet(os.path.join(_GEN_DIR, name))
+    gen_dir = os.environ.get("TPCTOOLS_TPCDS_DIR")
+    if not gen_dir:
+        _materialize(spark)
+        gen_dir = _GEN_DIR
+    return read(spark, os.path.join(gen_dir, name), name)
 
 
 def _with(*tables: str) -> str:

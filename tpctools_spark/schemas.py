@@ -9,10 +9,30 @@ Arrow Schema handed to the CSV reader with no inference). Two schema sets:
   generator/converter (``tpctools_spark.generate`` / ``convert``). The
   trailing nullable ``ignore`` column the reference carries into parquet
   (``src/tpch.rs:156`` etc.) is modeled for CSV scanning but dropped at
-  conversion time (SURVEY.md §1.3 deviation, by design).
+  conversion time (SURVEY.md §1.3 deviation, by design). ``TPCH_PARQUET``
+  is what the generator and converter therefore write: the same schemas
+  without ``ignore``.
 - ``TESTDATA``: the driver's fixture schemas (FIXTURES.md) — doubles for
   money, timestamps for dates, plus the extension tables
-  (events/documents/embeddings).
+  (events/documents/embeddings). ``generate_corpus`` writes documents
+  and embeddings in these schemas too; its events carry Spark's default
+  INT96 timestamps, which no declared schema matches.
+
+Read contract: query-path Parquet reads (:mod:`tpctools_spark.catalog`)
+hand one of these schemas (or ``schemas_tpcds.TPCDS``) to the reader, so
+building a query launches no schema-inference job. The reader picks the
+schema whose names and exact Parquet types equal the first data file's
+footer:
+
+- fixture layout (``<sf_dir>/<t>.parquet`` files): ``TESTDATA``;
+- TPC-H generator layout (``generate.generate`` and ``convert`` output,
+  also read by the spec-form queries as ``<dir>/<t>``): ``TPCH_PARQUET``;
+- TPC-DS generator layout: ``TPCDS``.
+
+Nullability is not part of the match: Spark reads every file-source
+column as nullable, declared or inferred. Data no schema here describes
+(a ``TIMESTAMP(NANOS)`` events file, a hand-written test corpus, a
+non-local path) is still read with Spark's inference.
 """
 
 from __future__ import annotations
@@ -132,6 +152,13 @@ TPCH_REFERENCE: dict[str, StructType] = {
 }
 
 TPCH_TABLE_NAMES = list(TPCH_REFERENCE)  # parity: src/tpch.rs:134-138
+
+# What ``generate`` and ``convert`` write: the reference schemas without
+# the CSV-only ``ignore`` column.
+TPCH_PARQUET: dict[str, StructType] = {
+    name: StructType([f for f in s.fields if f.name != "ignore"])
+    for name, s in TPCH_REFERENCE.items()
+}
 
 
 # --- Driver fixture schemas (FIXTURES.md; read from parquet footers).

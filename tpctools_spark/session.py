@@ -62,6 +62,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
+        # PySpark captures the Python call site of every wrapped
+        # DataFrame/Column call for error context, in extra py4j round
+        # trips: 590 of the 786 that building TPC-H Q1 makes. Off, an
+        # analysis error keeps its error class and message but loses
+        # the Python file:line in its DataFrame context. PySpark reads
+        # this once per process, from the first session it sees.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
